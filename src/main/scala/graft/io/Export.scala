@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Sampling
+import graft.operators.{Sampling, TextAnalysis}
 
 /** Training-data shard export: the file-layout step a pretraining run
   * reads. Documents are assigned to token-budget shards by
@@ -15,6 +15,12 @@ import graft.operators.Sampling
   * `manifest.json` (per-shard doc/token counts + totals) written last —
   * readers that require a complete export key off the manifest's
   * presence, the same written-last discipline as the streaming sinks.
+  *
+  * [[writeShards]] assigns, then calls [[writeAssigned]], the write of
+  * rows that already carry their `shard`: a caller whose frame holds the
+  * assignment ([[graft.operators.Curate.export]]'s decision frame) writes
+  * it without a second prefix scan. Both write the same bytes for the
+  * same assignment.
   *
   * Scale shape: the assignment is the two-level prefix scan (nothing
   * single-reducer over documents); the write is one partitioned write
@@ -28,14 +34,22 @@ object Export {
     * `path/manifest.json`; returns the per-shard manifest as a DataFrame
     * (shard, docs, tokens). */
   def writeShards(spark: SparkSession, docs: DataFrame, path: String,
-                  tokensPerShard: Long, format: String = "json"): DataFrame = {
+                  tokensPerShard: Long, format: String = "json"): DataFrame =
+    writeAssigned(spark, docs.join(Sampling.tokenShards(docs, tokensPerShard)
+      .select(col("doc_id"), col("shard")), Seq("doc_id")), path, tokensPerShard, format)
+
+  /** [[writeShards]] for rows already assigned: `assigned` is the
+    * documents (with `text`) plus a non-null `shard` column from
+    * [[Sampling.tokenShards]] at `tokensPerShard`; written and described
+    * exactly as [[writeShards]] writes that assignment. */
+  def writeAssigned(spark: SparkSession, assigned: DataFrame, path: String,
+                    tokensPerShard: Long, format: String = "json"): DataFrame = {
     require(format == "json" || format == "parquet",
       s"Unsupported shard format: $format (supported: json, parquet)")
-    val assigned = Sampling.tokenShards(docs, tokensPerShard)
-    docs.join(assigned.select(col("doc_id"), col("shard")), Seq("doc_id"))
-      .write.partitionBy("shard").mode("overwrite").format(format).save(path)
+    assigned.write.partitionBy("shard").mode("overwrite").format(format).save(path)
     val manifest = assigned.groupBy(col("shard"))
-      .agg(count(lit(1)).as("docs"), sum(col("n_tok")).as("tokens"))
+      .agg(count(lit(1)).as("docs"),
+        sum(size(TextAnalysis.toks).cast("bigint")).as("tokens"))
       .orderBy(col("shard"))
     // bounded by the shard count (total_tokens / tokensPerShard)
     val rows = manifest.collect()

@@ -86,7 +86,7 @@ object Curate {
       // the corpus-sized-but-narrow rows once for the two lineages.
       val measures = CorpusFilter.decisionsWithMeasures(docs, minQuality)
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .localCheckpoint(sys.env.contains("SPARK_GRAFT_EAGER_CHECKPOINT"))
+        .localCheckpoint(false)
       val verdict = SourceCurate.sourceGateFromStats(
           SourceCurate.sourceStatsFromMeasures(measures, minQuality),
           minAvgQuality)
@@ -182,8 +182,7 @@ object Curate {
     // conjunction and the shard scan so a budget-dropped doc never
     // consumes shard budget.
     val (flagged, gateCols) = budgetTokens.fold((flagged0, gateCols0)) { b =>
-      val pre = flagged0.localCheckpoint(
-        sys.env.contains("SPARK_GRAFT_EAGER_CHECKPOINT"))
+      val pre = flagged0.localCheckpoint(false)
       val sel = BudgetSelect.selectByBudget(
           docs.join(pre.where(col("kept") && col("__b") < trainPct)
             .select(col("doc_id")), Seq("doc_id"), "left_semi"), b)
@@ -205,16 +204,7 @@ object Curate {
     // first action; conditional-prefix-scan formulations that avoid the
     // fan-out still consume the frame twice (offsets aggregation + final
     // join), so the boundary is the fix, not a rewrite.
-    // SPARK_GRAFT_EAGER_CHECKPOINT (diagnostic knob, r17 stall hunt —
-    // the SPARK_GRAFT_BENCH_CLEARCACHE precedent): a LAZY checkpoint
-    // leaves a race window in which concurrent consumers can each
-    // recompute the full gates lineage before the checkpoint takes; the
-    // eager form closes that window. VERDICT (r17 A/B + r18 task-count
-    // instrument): the race is NOT the suite's stall mechanism — eager
-    // still stalled 2/6, and stalled windows run the byte-identical task
-    // set (PLANS r18). Knob kept as a documented diagnostic.
-    val matFlags = flagged.localCheckpoint(
-      sys.env.contains("SPARK_GRAFT_EAGER_CHECKPOINT"))
+    val matFlags = flagged.localCheckpoint(false)
     // running token sums over kept-train docs only; the conditional-zero
     // contribution equals tokenShards over the kept-train SUBSET, which
     // is what the oracle computes
@@ -323,20 +313,25 @@ object Curate {
   }
 
   /** Materialize a [[pipeline]] run: kept TRAIN docs as token-budget
-    * shards ([[graft.io.Export.writeShards]] — files + manifest), every
-    * rejected doc with its per-gate attribution to `path/quarantine`
-    * (the forensics table curators re-tune thresholds from), and the
-    * per-language dataset card ([[CorpusFilter.report]] over the kept
-    * corpus) to `path/card`. Returns the decision frame so callers can
-    * chain without recomputing. */
+    * shards (files + manifest under `path/train`), every rejected doc
+    * with its per-gate attribution to `path/quarantine` (the forensics
+    * table curators re-tune thresholds from), and the per-language dataset
+    * card ([[CorpusFilter.report]] over the kept corpus) to `path/card`.
+    * The decision frame is materialized ONCE (eager localCheckpoint) and
+    * all three writes read it; the shards are its own `shard` column,
+    * written by [[graft.io.Export.writeAssigned]]. Returns that frame so
+    * callers chain without recomputing. It is backed by local-checkpoint
+    * blocks that ContextCleaner releases once the frame is unreachable —
+    * the fault model of every other localCheckpoint boundary here. */
   def export(spark: SparkSession, docs: DataFrame, path: String,
              minQuality: Double = 0.3, tokensPerShard: Long = 10000L,
              trainPct: Int = 80, benchFromPct: Int = 90): DataFrame = {
     val decisions = pipeline(docs, minQuality, tokensPerShard, trainPct, benchFromPct)
-    val trainDocs = docs.join(
-      decisions.where(col("kept") && col("split") === "train").select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    graft.io.Export.writeShards(spark, trainDocs, s"$path/train", tokensPerShard)
+      .localCheckpoint(true)
+    graft.io.Export.writeAssigned(spark, docs.join(
+        decisions.where(col("kept") && col("split") === "train")
+          .select(col("doc_id"), col("shard")), Seq("doc_id")),
+      s"$path/train", tokensPerShard)
     decisions.where(!col("kept"))
       .write.mode("overwrite").parquet(s"$path/quarantine")
     CorpusFilter.report(docs.join(

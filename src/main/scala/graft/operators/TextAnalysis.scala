@@ -847,13 +847,16 @@ object TextAnalysis {
           .otherwise(lit(alpha * m * m) / col("z")).as("e"))
   }
 
-  /** Zipf-safe LEFT join of a key-hot probe stream against a count table:
-    * the bounded head (top-`headSize` rows by count) broadcasts so hot
-    * keys resolve map-side; only head-miss rows (tail + unseen, per-key
+  /** LEFT join of a key-hot probe stream against a count table: the
+    * bounded head (top-`headSize` rows by count) broadcasts so hot keys
+    * resolve map-side. Exactness is independent of where the cut falls.
+    * Null probe keys never match (standard left-join semantics) and keep
+    * their row with a null count. Only the union form (`linear = false`)
+    * is Zipf-safe: there, only head-miss rows (tail + unseen, per-key
     * multiplicity capped by the rank-`headSize` count) reach the shuffled
-    * tail join. Exactness is independent of where the cut falls. Null
-    * probe keys never match (standard left-join semantics) and keep their
-    * row with a null count.
+    * tail join. The linear form sends every probe row, head hits
+    * included, through the tail exchange, hashed on the raw key — so hot
+    * keys skew that exchange's partitions.
     *
     * Two physical shapes, both exact, chosen by the CALLER's chain depth
     * (r18 optimization, both A/B-measured at sf0.1/32 cpus):
@@ -867,7 +870,8 @@ object TextAnalysis {
     *    keys on the columns AND `head-missed` (a head-hit row satisfies no
     *    tail condition, keeps a null tail count, and the coalesce picks its
     *    broadcast-resolved head count). Hit rows do cross the tail exchange
-    *    as already-resolved passengers, but the subtree is evaluated ONCE:
+    *    as already-resolved passengers — NOT Zipf-safe: a hot key's rows
+    *    all land in one exchange partition — but the subtree is evaluated ONCE:
     *    under the union form each chained level DOUBLES the upstream, so
     *    the bigram LM's three levels re-ran the tokenize/explode base
     *    2³ = 8 times (214 Exchanges in the lm_score_bigram plan, 67 cpu-s
@@ -931,9 +935,11 @@ object TextAnalysis {
     * Scale shape: the (prev, cur) pairing is built NARROWLY per document
     * (zip of the token array with its shift — never a positional
     * self-join), and all three model joins (unigram on cur, context on
-    * prev, bigram on (prev, cur)) go through [[headTailLeftJoin]]: the
-    * Zipf head of each table broadcasts, so "of the" never shuffles on a
-    * raw token key. Model tables are aggregates — the bigram table is the
+    * prev, bigram on (prev, cur)) go through [[headTailLeftJoin]]'s
+    * LINEAR form: the Zipf head of each table broadcasts and resolves "of
+    * the" map-side, but its rows still ride the tail exchange, hashed on
+    * the raw token key, so hot tokens skew those exchanges (the linear
+    * form's documented trade). Model tables are aggregates — the bigram table is the
     * big one (vocab², Zipf-truncated in practice); a 5-gram KenLM-style
     * model is this same plan with a wider key. */
   def lmCrossEntropyBigram(docs: DataFrame, trainBucketMax: Int = 50,

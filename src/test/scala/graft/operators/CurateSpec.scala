@@ -304,5 +304,30 @@ class CurateSpec extends SparkSpec {
     // the card aggregates the KEPT corpus only
     val card = spark.read.parquet(s"$path/card")
     assert(card.agg(sum(col("n_docs"))).head().getLong(0) == kept)
+
+    // each train doc sits in the shard partition its decision row names
+    val train = decisions.where(col("kept") && col("split") === "train")
+    val shardOf = train.select(col("doc_id"), col("shard")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the shard partition column reads back as its narrowest type (int)
+    assert(shards.select(col("doc_id"), col("shard")).collect()
+      .map(r => r.getLong(0) -> r.getAs[Number](1).longValue).toMap == shardOf)
+    // the manifest is byte-for-byte the one tokenShards over the kept-train
+    // docs describes (the assignment writeShards would have recomputed)
+    val trainDocs = docs.join(train.select(col("doc_id")), Seq("doc_id"), "left_semi")
+    val expected = Sampling.tokenShards(trainDocs, 10000L).groupBy(col("shard"))
+      .agg(count(lit(1)), sum(col("n_tok"))).orderBy(col("shard")).collect()
+    assert(expected.length > 1, "the fixture should span several shards")
+    val manifest = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "train", "manifest.json")), "UTF-8")
+    assert(manifest == expected.map(r =>
+        s"""{"shard":${r.getLong(0)},"docs":${r.getLong(1)},"tokens":${r.getLong(2)}}""")
+      .mkString(s"""{"tokens_per_shard":10000,"n_shards":${expected.length},"shards":[""",
+        ",", "]}\n"))
+    // the quarantine is the rejected decision rows, row for row
+    val rejected = decisions.where(!col("kept")).collect().toSeq
+    assert(quarantine.orderBy(col("doc_id")).collect().toSeq == rejected)
+    // the returned frame outlives the export's writes and is the pipeline
+    assert(decisions.collect().toSeq == Curate.pipeline(docs).collect().toSeq)
   }
 }

@@ -298,6 +298,26 @@ class SamplingSpec extends SparkSpec {
     assert(manifest.map(_.getLong(1)).sum == docs.count())
   }
 
+  test("writeAssigned: a pre-assigned frame writes writeShards' files and manifest bytes") {
+    val docs = Tables.documents(spark, dir)
+    def tmp() = java.nio.file.Files.createTempDirectory("graft-shards-").toString
+    val (viaShards, viaAssigned) = (tmp(), tmp())
+    graft.io.Export.writeShards(spark, docs, viaShards, tokensPerShard = 500L)
+    // the same assignment, computed apart (materialized, re-partitioned)
+    // and handed over already joined to the documents
+    val assignment = Sampling.tokenShards(docs, 500L)
+      .select(col("doc_id"), col("shard")).localCheckpoint()
+    graft.io.Export.writeAssigned(spark,
+      docs.join(assignment, Seq("doc_id")).repartition(3), viaAssigned, 500L)
+    def back(p: String) = spark.read.json(p).orderBy(col("doc_id")).collect().toSeq
+    val a = back(viaShards)
+    assert(a.length == docs.count())
+    assert(a == back(viaAssigned))
+    def manifest(p: String) = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p, "manifest.json")).toSeq
+    assert(manifest(viaShards) == manifest(viaAssigned))
+  }
+
   // minimal manifest probe (avoids a JSON dependency): extracts top-level
   // integer fields of the flat manifest header
   private def ujsonLite(s: String): Map[String, Long] =
